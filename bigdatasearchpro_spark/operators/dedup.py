@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 
 def _shj(df: DataFrame) -> DataFrame:
-    # the winner tables must JOIN hash-shuffled: an unhinted planner
+    # the winner table must JOIN hash-shuffled: an unhinted planner
     # falls back to sort-merge at corpus scale, which would SORT the
     # wide probe rows — the one thing this operator exists to avoid
     # (the test_plans gate pins it)
@@ -38,43 +38,48 @@ def dedup_exact(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
 def dedup_last_write_wins(
     df: DataFrame,
     key: str,
-    order_by: Sequence[str],
+    order_by: Sequence[str] | None = None,
     *,
     keep: str = "last",
-    materialize: bool = False,
 ) -> DataFrame:
-    """Keep exactly one row per ``key``, deterministically.
+    """Keep exactly one row per non-null ``key``, deterministically.
 
     ``keep='last'`` by ``order_by`` descending reproduces ES
     last-write-wins for repeated ``_id``; ``keep='first'`` gives
-    keep-oldest. Ties on the full ``order_by`` vector break by content
-    fingerprint (largest xxhash64 of the row), so the survivor set is
-    deterministic across runs, partitionings, and task retries.
+    keep-oldest. An empty or missing ``order_by`` orders by every
+    non-key column in column order: the greatest (or least) full
+    payload wins, which is deterministic but is not arrival order — a
+    batch DataFrame has no write order to recover, so pass a
+    write-order column (ingest timestamp, sequence number) for true
+    LWW. Ties on the full order vector break by content fingerprint
+    (largest xxhash64 of the row for ``'last'``, smallest for
+    ``'first'``), so the survivor set is deterministic across runs,
+    partitionings, and task retries. Rows whose ``key`` is null all
+    survive unchanged: ES auto-generates their ids, so they never
+    overwrite each other.
 
-    Implementation (the 100 TB shape): the winner per key is chosen on
-    a NARROW projection — ``(key, order columns, fingerprint)``, a few
-    machine words per row — by iterated lexicographic reduction: for
-    each order column in turn, a hash aggregation finds the per-key
-    extreme and a hash join keeps only the tied rows (``eqNullSafe``,
-    so all-null keys survive; max/min skip nulls, so nulls lose to any
-    value — "null writes never win"). A final hash aggregation on the
-    fingerprint breaks remaining ties, and the winning rows are
-    recovered by a HASH semi-join on ``(key, fingerprint)``
-    (``shuffle_hash`` hints throughout: the probe side must not sort).
-    Wide rows cross the wire once and are NEVER sorted.
+    Implementation: the winner per key is ONE aggregate over a narrow
+    projection, ``(key, struct)``. The struct holds, for each order
+    column in turn, a null flag and then the value, and the row
+    fingerprint last; the winner is its ``max`` (``'last'``) or
+    ``min`` (``'first'``), and the winner's ``__fp`` field is the
+    winning fingerprint. Structs compare field by field, so this is the
+    lexicographic order on the order vector with the fingerprint as
+    final tie-break. The flag is ``isNotNull`` under ``max`` and
+    ``isNull`` under ``min``: a null value sorts below every non-null
+    one under ``max`` and above every non-null one under ``min``, so
+    nulls lose in both directions ("null writes never win"), and two
+    nulls tie on the flag and fall through to the next column. The plan
+    has the same shape for one order column or many. A struct buffer is
+    not hash-aggregable, so Catalyst plans this as a SortAggregate; its
+    sorts see only the narrow ``(key, struct)`` rows, never the wide
+    ones.
 
-    Why this shape — measured at sf1 (6M stringified lineitem rows,
-    local[32]), winner selection alone:
-
-    - ``max_by(struct(row), struct(order))``: struct aggregation
-      buffers are not hash-aggregable, so Catalyst plans SortAggregate
-      — the full wide rows sort TWICE (partial + final): ~180 s;
-    - narrow ``row_number()`` window: WindowExec's per-group buffering
-      over millions of tiny (1-2 row) groups: ~80 s;
-    - this iterated hash-agg/hash-join reduction: ~8 s.
-
-    Identical duplicate rows (bit-equal content ⇒ equal fingerprint)
-    all match the winning ``(key, fingerprint)``, so a final
+    The winning rows are recovered by a HASH semi-join on ``(key,
+    fingerprint)`` (``shuffle_hash``: the probe side must not sort), so
+    wide rows cross the wire once and are never sorted before it. Identical
+    duplicate rows (bit-equal content ⇒ equal fingerprint) all match
+    the winning ``(key, fingerprint)``, so a final
     ``dropDuplicates([key, fingerprint])`` collapses them to the single
     row the contract requires — keyed by the SEMI-JOIN's own join keys,
     so the aggregation reuses the join's hash partitioning and adds NO
@@ -86,10 +91,13 @@ def dedup_last_write_wins(
     set and already clustered by the join, never the corpus (the gate
     in ``tests/test_plans.py`` pins all of this: wide rows cross
     exactly ONE exchange, and no wide sort sits upstream of it).
+
+    The input is read twice (winner selection, then recovery), so it
+    must be deterministic: persist or checkpoint a changing source
+    first, or the fingerprints of the two reads can disagree.
     """
-    if not order_by:
-        raise ValueError("order_by must name at least one column")
-    ext_fn = F.max if keep == "last" else F.min
+    order = list(order_by or []) or [c for c in df.columns if c != key] or [key]
+    last = keep == "last"
     # Spark's xxhash64 SKIPS null inputs entirely, so hashing the bare
     # columns would make rows that differ only in WHICH column is null
     # collide (e.g. (0, NULL, 0) and (0, 0, NULL)) and the winner
@@ -100,42 +108,32 @@ def dedup_last_write_wins(
     fp = F.xxhash64(
         *[x for c in df.columns for x in (F.col(c).isNull(), F.col(c))]
     )
-    # ``materialize`` (r13, reverting the r12 default): the r12 round
-    # persisted the narrow candidates + checkpointed the winner table
-    # unconditionally, on an A/B that measured the ETL chain 8.5->5.4 s
-    # — but that trade was an artifact of the G1 allocation contention
-    # fixed in session.py this round: re-measured under the throughput
-    # collector (4 interleaved rounds at matched calibration), the
-    # LAZY plan wins on BOTH the wide 17-column ETL chain (3.5-3.7 s vs
-    # 4.6-5.1 s, ~1.35x) and the thin l1 fixture (3.18 vs 4.41 s), so
-    # lazy is the default again.  The knob remains for deployments
-    # where re-deriving the candidates is costlier than caching them —
-    # re-computation re-scans the FULL input (the fingerprint hashes
-    # every column, so nothing prunes) (order_by)+2 times, so a corpus
-    # on cold object storage with cheap local cache disk should pass
-    # materialize=True; a fast-scan/slow-disk installation should not.
-    cand = df.select(
-        F.col(key), fp.alias("__fp"), *[F.col(c) for c in order_by]
+    rank = F.struct(
+        *[
+            x
+            for i, c in enumerate(order)
+            for x in (
+                (F.col(c).isNotNull() if last else F.col(c).isNull()).alias(f"n{i}"),
+                F.col(c).alias(f"v{i}"),
+            )
+        ],
+        fp.alias("__fp"),
     )
-    if materialize:
-        cand = cand.persist()
-    reduced = cand
-    for c in order_by:
-        ext = reduced.groupBy(key).agg(ext_fn(c).alias("__m"))
-        reduced = (
-            reduced.join(_shj(ext), key)
-            .filter(F.col(c).eqNullSafe(F.col("__m")))
-            .drop("__m")
-        )
-    winners = reduced.groupBy(key).agg(ext_fn("__fp").alias("__fp"))
-    if materialize:
-        winners = winners.localCheckpoint(eager=True)
-        cand.unpersist()
+    keyed = df.filter(F.col(key).isNotNull())
+    # project (key, struct) BEFORE grouping: computed inside the
+    # aggregate, the struct's inputs (every column, via the fingerprint)
+    # would ride through the partial aggregate's sort
+    winners = (
+        keyed.select(key, rank.alias("__r"))
+        .groupBy(key)
+        .agg((F.max if last else F.min)("__r")["__fp"].alias("__fp"))
+    )
     return (
-        df.withColumn("__fp", fp)
+        keyed.withColumn("__fp", fp)
         .join(_shj(winners), [key, "__fp"], "left_semi")
         .dropDuplicates([key, "__fp"])
         .drop("__fp")
+        .unionByName(df.filter(F.col(key).isNull()))
     )
 
 

@@ -20,4 +20,5 @@ from bigdatasearchpro_spark.plans.inspect import (  # noqa: F401
     shuffle_count,
     wholestage_codegen_count,
     wide_shuffle_count,
+    wide_sort_count,
 )

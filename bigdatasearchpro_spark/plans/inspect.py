@@ -190,10 +190,21 @@ def wide_shuffle_count(df: DataFrame, wide_cols: "list[str]") -> int:
     (The textual plan can't answer this: Exchange lines print only the
     partitioning expressions, not the rows they move.) Broadcast and
     reused exchanges don't count."""
+    return _wide_node_count(df, wide_cols, "Exchange")
+
+
+def wide_sort_count(df: DataFrame, wide_cols: "list[str]") -> int:
+    """Sort operators whose rows carry any of ``wide_cols`` — the plan
+    string prints only a Sort's keys, not the rows it sorts (a
+    SortAggregate's pre-sort included)."""
+    return _wide_node_count(df, wide_cols, "Sort")
+
+
+def _wide_node_count(df: DataFrame, wide_cols: "list[str]", node_name: str) -> int:
     wide = set(wide_cols)
     n = 0
     for node in _walk_jvm_plan(df._jdf.queryExecution().executedPlan()):
-        if node.nodeName() != "Exchange":
+        if node.nodeName() != node_name:
             continue
         out = node.output()
         names = {out.apply(i).name() for i in range(out.size())}

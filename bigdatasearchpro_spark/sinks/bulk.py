@@ -125,10 +125,8 @@ def bulk_index_table(
 
     True last-write-wins needs a write-order column — pass it as
     ``order_by`` (ingest timestamp, sequence number). Without one the
-    winner is the greatest full payload (all non-id columns, compared in
-    column order): deterministic across runs and partitionings, but NOT
-    arrival order — a batch DataFrame has no inherent write order to
-    recover.
+    winner is the greatest full payload, deterministic but NOT arrival
+    order (see ``dedup_last_write_wins``).
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
@@ -136,8 +134,7 @@ def bulk_index_table(
     from bigdatasearchpro_spark.operators.dedup import dedup_last_write_wins
 
     if id_col is not None:
-        order = order_by or [c for c in df.columns if c != id_col] or [id_col]
-        df = dedup_last_write_wins(df, id_col, order, keep="last")
+        df = dedup_last_write_wins(df, id_col, order_by, keep="last")
     # rows written = this batch, observed during the write itself — a
     # table re-count would re-scan the sink and, under mode='append',
     # inflate the result with pre-existing rows.

@@ -171,10 +171,8 @@ def foreach_batch_bulk_sink(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         df = batch_df
         if id_col is not None:
-            # deterministic greatest-payload winner within the batch;
-            # pass a write-order column for true LWW (see bulk_index_table)
-            order = [c for c in df.columns if c != id_col] or [id_col]
-            df = dedup_last_write_wins(df, id_col, order, keep="last")
+            # greatest-payload winner within the batch (no write order)
+            df = dedup_last_write_wins(df, id_col, keep="last")
         df.write.mode("append").parquet(out_dir)
 
     return (

@@ -11,6 +11,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
+# The session default heap (48g) lets the one long-lived test JVM grow
+# past a 16 GB host's RAM over a full run, where the kernel OOM-kills it
+# and every later test errors. The sf0.001 fixtures need far less.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
+
 
 @pytest.fixture(scope="session")
 def spark():

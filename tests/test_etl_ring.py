@@ -54,6 +54,32 @@ def test_dedup_last_write_wins(spark):
     assert got == {"a": "new", "b": "only"}
 
 
+def test_dedup_last_write_wins_keeps_every_null_key_row(spark):
+    """A null id is auto-generated by ES (FIXTURES.md §A), so null-key
+    rows never overwrite each other: every one survives, bit-identical
+    copies included, while non-null keys still keep one row each."""
+    df = spark.createDataFrame(
+        [(None, 1, "a"), (None, 2, "b"), (None, 2, "b"), ("x", 1, "c"),
+         ("x", 2, "d")],
+        "id string, seq int, payload string",
+    )
+    out = dedup.dedup_last_write_wins(df, "id", ["seq"], keep="last")
+    assert sorted(r["payload"] for r in out.collect()) == ["a", "b", "b", "d"]
+
+
+def test_dedup_last_write_wins_default_order(spark):
+    """No order (None or []) orders by every non-key column: the
+    greatest payload wins."""
+    df = spark.createDataFrame(
+        [("a", 1, "y"), ("a", 2, "x"), ("b", 5, "z")],
+        "id string, seq int, payload string",
+    )
+    for order in (None, []):
+        out = dedup.dedup_last_write_wins(df, "id", order)
+        got = {r["id"]: r["payload"] for r in out.collect()}
+        assert got == {"a": "x", "b": "z"}
+
+
 def test_dedup_exact_by_hash_unique_and_deterministic(spark, docs):
     doubled = docs.unionByName(docs.withColumn("doc_id", F.col("doc_id") + 10**6))
     out = dedup.dedup_exact_by_hash(doubled, "text", "doc_id")

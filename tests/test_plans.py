@@ -63,11 +63,12 @@ def test_grouped_agg_single_shuffle(spark, sf_dir):
 
 
 def test_lww_dedup_never_sorts_wide_rows(spark, sf_dir):
-    """The LWW dedup must plan as hash aggregations + hash joins over a
-    narrow winner projection — no SortAggregate (the struct-buffer
-    max_by trap: sorts the full wide rows twice), no window, no
-    sort-merge join (would sort the wide probe side). Measured 22x at
-    sf1."""
+    """The LWW dedup must plan as ONE winner aggregate over a narrow
+    ``(key, struct(order, fingerprint))`` projection plus ONE hash
+    semi-join back to the wide rows — no aggregate over the wide rows
+    (the struct-buffer ``max_by(struct(row), ...)`` trap: sorts the
+    full wide rows twice, measured 22x at sf1), no window, no
+    sort-merge join (would sort the wide probe side)."""
     from bigdatasearchpro_spark.operators import dedup, transform
     from bigdatasearchpro_spark.sources.files import load_table
 
@@ -98,6 +99,33 @@ def test_lww_dedup_never_sorts_wide_rows(spark, sf_dir):
         # narrow; SortAggregate is covered by the exchange count above
         if "Sort" in line and "SortAggregate" not in line:
             assert not any(c in line for c in wide_only), line
+
+
+def test_lww_dedup_plan_does_not_grow_with_order_columns(spark, sf_dir):
+    """Winner selection is one aggregate whatever the order vector's
+    length: an 8-column order plans the same number of exchanges as a
+    1-column one (a per-column reduction adds an aggregate and a join
+    per column, and its plan doubles with each)."""
+    from bigdatasearchpro_spark.operators import dedup, transform
+    from bigdatasearchpro_spark.plans import wide_sort_count
+
+    doc = transform.stringify_all(
+        transform.composite_key(
+            load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_linenumber",
+            out="s_guid",
+        )
+    )
+    order8 = [c for c in doc.columns if c != "s_guid"][:8]
+    one = dedup.dedup_last_write_wins(doc, "s_guid", order8[:1])
+    eight = dedup.dedup_last_write_wins(doc, "s_guid", order8)
+    assert len(order8) == 8
+    assert shuffle_count(eight) == shuffle_count(one)
+    # the winner aggregate sorts only (key, struct) rows: the one sort
+    # carrying payload columns is the partition-local collapse after
+    # the semi-join
+    payload = [c for c in doc.columns if c != "s_guid"]
+    assert wide_sort_count(one, payload) == 1
+    assert wide_sort_count(eight, payload) == 1
 
 
 def test_broadcast_join_fact_side_never_shuffles_for_join(spark, sf_dir):

@@ -228,15 +228,17 @@ def test_phrase_prefix_expr_matches_bruteforce(spark, docs, terms):
     assert got == want
 
 
-def _brute_lww_candidates(rows, order_idx):
-    """The iterated nulls-lose lexicographic reduction dedup_last_write_wins
-    documents: per order column, keep rows at the non-null max (keep all
-    when every value is null)."""
+def _brute_lww_candidates(rows, order_idx, keep="last"):
+    """The nulls-lose lexicographic order dedup_last_write_wins
+    documents, as an iterated reduction: per order column, keep rows at
+    the non-null max (``'last'``) or min (``'first'``); keep all when
+    every value is null."""
+    pick = max if keep == "last" else min
     cand = list(rows)
     for i in order_idx:
         vals = [r[i] for r in cand if r[i] is not None]
         if vals:
-            m = max(vals)
+            m = pick(vals)
             cand = [r for r in cand if r[i] == m]
     return cand
 
@@ -269,26 +271,28 @@ def test_lww_dedup_null_shift_regression(spark):
         ),
         min_size=1,
         max_size=20,
-    )
+    ),
+    keep=st.sampled_from(["last", "first"]),
 )
-def test_lww_dedup_survivor_properties(spark, rows):
-    """For any input: exactly one survivor per key; the survivor is in
-    the brute-force nulls-lose lexicographic candidate set; and the
-    result is identical under a different partitioning."""
+def test_lww_dedup_survivor_properties(spark, rows, keep):
+    """For any input and either ``keep``: exactly one survivor per key;
+    the survivor is in the brute-force nulls-lose lexicographic
+    candidate set; and the result is identical under a different
+    partitioning."""
     from bigdatasearchpro_spark.operators.dedup import dedup_last_write_wins
 
     df = spark.createDataFrame(rows, "k int, o1 int, o2 int, payload string")
-    out = dedup_last_write_wins(df, "k", ["o1", "o2"], keep="last").collect()
+    out = dedup_last_write_wins(df, "k", ["o1", "o2"], keep=keep).collect()
     keys = [r["k"] for r in out]
     assert sorted(keys) == sorted(set(k for k, *_ in rows))  # one per key
     by_key = {}
     for t in rows:
         by_key.setdefault(t[0], []).append(t)
     for r in out:
-        cand = _brute_lww_candidates(by_key[r["k"]], [1, 2])
+        cand = _brute_lww_candidates(by_key[r["k"]], [1, 2], keep)
         assert (r["k"], r["o1"], r["o2"], r["payload"]) in cand
     again = dedup_last_write_wins(
-        df.repartition(7, "payload"), "k", ["o1", "o2"], keep="last"
+        df.repartition(7, "payload"), "k", ["o1", "o2"], keep=keep
     ).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
